@@ -16,10 +16,13 @@ from pyspark.sql import functions as F
 
 from s4_spark.queries.helpers import dsum, ordered_small, sql_dsum, t
 from s4_spark.queries.registry import query
+from s4_spark.session import scoped_conf
 from s4_spark.streaming.rigs import (
+    as_event_time,
     events_stream,
     instant_as_utc_ntz,
-    ntz_as_utc_instant,
+    land_file,
+    replay,
     run_to_memory,
     run_to_parquet,
     scratch,
@@ -222,10 +225,7 @@ def q094(spark, sf_dir):
     producer), not a query-path pattern."""
     from pyspark.sql import Window as W
 
-    ev = t(spark, sf_dir, "events").select("event_id", "ts")
-    if ev.schema["ts"].dataType.typeName() == "timestamp_ntz":
-        # event time (withWatermark) requires TIMESTAMP; pin wall clock=UTC
-        ev = ev.withColumn("ts", ntz_as_utc_instant("ts"))
+    ev = as_event_time(t(spark, sf_dir, "events").select("event_id", "ts"))
     lo = ev.agg(F.min("ts")).collect()[0][0]
     base = F.lit(lo).cast("timestamp")
     p1 = ev.select(
@@ -249,8 +249,6 @@ def q094(spark, sf_dir):
     )
     p2 = late.unionByName(fresh)
 
-    from s4_spark.streaming.rigs import two_phase_replay
-
     def build(stream):
         return (
             stream.withWatermark("ts", "10 minutes")
@@ -260,7 +258,7 @@ def q094(spark, sf_dir):
         )
 
     # bounded result (calendar-sized window buckets)
-    return ordered_small(two_phase_replay(spark, p1, p2, build, tag="q094"), "w_start")
+    return ordered_small(replay(spark, [(p1,), (p2,)], build, tag="q094"), "w_start")
 
 
 @query(
@@ -559,8 +557,6 @@ def q165(spark, sf_dir):
         F.lit(-1).alias("r_val"),
     )
 
-    from s4_spark.streaming.rigs import two_stream_two_phase
-
     def build(ls, rs):
         lw = ls.withWatermark("lts", "5 minutes")
         rw = rs.withWatermark("rts", "5 minutes")
@@ -572,9 +568,7 @@ def q165(spark, sf_dir):
             "left_outer",
         ).select("user_id", "l_val", "r_val")
 
-    return two_stream_two_phase(spark, l1, r1, l2, r2, build, tag="q165").orderBy(
-        "user_id"
-    )
+    return replay(spark, [(l1, r1), (l2, r2)], build, tag="q165").orderBy("user_id")
 
 
 @query(
@@ -666,11 +660,23 @@ def transform_with_state_available() -> bool:
 
 
 def _ship_vendored_protobuf(spark) -> None:
-    """Make the vendored google.protobuf importable in Python workers of
-    an ALREADY-RUNNING session (whose daemon env predates the gate's
+    """Prepare a session for transformWithState.
+
+    Sets the RocksDB state-store provider, which transformWithState
+    REQUIRES — here, not only in get_spark(), because the driver may run
+    these entries on a vanilla session (same self-sufficiency rationale
+    as catalog.table).
+
+    Then makes the vendored google.protobuf importable in Python workers
+    of an ALREADY-RUNNING session (whose daemon env predates the gate's
     PYTHONPATH edit): zip the vendor tree once per process and addPyFile
-    it — Spark inserts the zip into every worker's sys.path. No-op when
-    the real package resolved (workers then see it the same way)."""
+    it — Spark inserts the zip into every worker's sys.path. That step
+    is a no-op when the real package resolved (workers then see it the
+    same way)."""
+    spark.conf.set(
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    )
     if VENDOR_DIR not in sys.path:
         return
     import zipfile
@@ -711,15 +717,10 @@ def _q174(spark, sf_dir):
     final snapshot equals the batch aggregate), so the two entries pin
     batch-equivalence of BOTH stateful APIs side by side.
 
-    The provider conf is set here — not only in get_spark() — because
-    transformWithState REQUIRES RocksDB and the driver may run this on a
-    vanilla session (same self-sufficiency rationale as catalog.table)."""
+    ``_ship_vendored_protobuf`` sets the RocksDB provider conf that
+    transformWithState requires, so a vanilla session works too."""
     from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
     _ship_vendored_protobuf(spark)
     ev = events_stream(spark, sf_dir).select("user_id", "value")
 
@@ -1096,50 +1097,34 @@ def q235(spark, sf_dir):
     Reference parity: the reference's river buffers and re-sequences
     socket frames before its flush loop (river/jsonr.go) — this is the
     event-time analog with exactly-once state."""
-    import os
-    import shutil
-
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from s4_spark.streaming.rigs import scratch
 
     DEADLINE_US = 48 * 3600 * 1_000_000
 
-    ev = t(spark, sf_dir, "events").select("user_id", "event_type", "ts", "event_id")
-    if ev.schema["ts"].dataType.typeName() == "timestamp_ntz":
-        ev = ev.withColumn("ts", ntz_as_utc_instant("ts"))
+    ev = as_event_time(
+        t(spark, sf_dir, "events").select("user_id", "event_type", "ts", "event_id")
+    )
     bounds = ev.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).collect()[0]
     span_hours = int((bounds["hi"] - bounds["lo"]).total_seconds() // 3600) + 2
     hi = F.lit(bounds["hi"]).cast("timestamp")
 
     landing = scratch("q235_landing")
-    os.makedirs(landing, exist_ok=True)
-
-    def drop(df, fname, mtime):
-        stage = scratch("q235_stage")
-        df.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = next(
-            p for p in os.listdir(stage)
-            if p.startswith("part-") and p.endswith(".parquet")
-        )
-        dest = os.path.join(landing, fname)
-        shutil.copyfile(os.path.join(stage, part), dest)
-        os.utime(dest, (mtime, mtime))
 
     # three hash-split (time-interleaved) batches, then the watermark
     # sentinel, then an empty tick so the release timeout fires in a
     # deterministic final micro-batch; strictly increasing mtimes pin
     # FileStreamSource's processing order
     for i in range(3):
-        drop(ev.filter(F.abs(F.xxhash64("event_id")) % 3 == i), f"{i:03d}.parquet", 1_000_000 + i)
+        split = ev.filter(F.abs(F.xxhash64("event_id")) % 3 == i)
+        land_file(split, landing, f"{i:03d}.parquet", 1_000_000 + i)
     sentinel = spark.range(1).select(
         F.lit(-1).cast("long").alias("user_id"),
         F.lit("sentinel").alias("event_type"),
         F.timestamp_add("HOUR", F.lit(span_hours + 1), hi).alias("ts"),
         F.lit(-1).cast("long").alias("event_id"),
     )
-    drop(sentinel, "003.parquet", 1_000_003)
-    drop(ev.limit(0), "004.parquet", 1_000_004)
+    land_file(sentinel, landing, "003.parquet", 1_000_003)
+    land_file(ev.limit(0), landing, "004.parquet", 1_000_004)
 
     stream = (
         spark.readStream.schema(
@@ -1303,10 +1288,6 @@ def _q240(spark, sf_dir):
     user_id."""
     from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
     _ship_vendored_protobuf(spark)
     ev = events_stream(spark, sf_dir).select("user_id", "value", "event_id")
 
@@ -1402,45 +1383,26 @@ def _q241(spark, sf_dir):
     """
     from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
     _ship_vendored_protobuf(spark)
 
     GAP_US = 30 * 60 * 1_000_000
     GAP_MS = 30 * 60 * 1000
 
-    ev = t(spark, sf_dir, "events").select("user_id", "event_type", "ts", "event_id")
-    if ev.schema["ts"].dataType.typeName() == "timestamp_ntz":
-        ev = ev.withColumn("ts", ntz_as_utc_instant("ts"))
+    ev = as_event_time(
+        t(spark, sf_dir, "events").select("user_id", "event_type", "ts", "event_id")
+    )
     hi = ev.agg(F.max("ts")).collect()[0][0]
 
-    import shutil
-
     landing = scratch("q241_landing")
-    os.makedirs(landing, exist_ok=True)
-
-    def drop(df, fname, mtime):
-        stage = scratch("q241_stage")
-        df.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = next(
-            p for p in os.listdir(stage)
-            if p.startswith("part-") and p.endswith(".parquet")
-        )
-        dest = os.path.join(landing, fname)
-        shutil.copyfile(os.path.join(stage, part), dest)
-        os.utime(dest, (mtime, mtime))
-
-    drop(ev, "000.parquet", 1_000_000)
+    land_file(ev, landing, "000.parquet", 1_000_000)
     sentinel = spark.range(1).select(
         F.lit(-1).cast("long").alias("user_id"),
         F.lit("sentinel").alias("event_type"),
         F.timestamp_add("HOUR", F.lit(40), F.lit(hi).cast("timestamp")).alias("ts"),
         F.lit(-1).cast("long").alias("event_id"),
     )
-    drop(sentinel, "001.parquet", 1_000_001)
-    drop(ev.limit(0), "002.parquet", 1_000_002)
+    land_file(sentinel, landing, "001.parquet", 1_000_001)
+    land_file(ev.limit(0), landing, "002.parquet", 1_000_002)
 
     stream = (
         spark.readStream.schema(
@@ -1588,18 +1550,13 @@ def _q247(spark, sf_dir):
     stream shuffles once on user_id; state stays 3 int64s per user."""
     from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
     _ship_vendored_protobuf(spark)
 
     DEADLINE_US = 48 * 3600 * 1_000_000
 
-    ev = t(spark, sf_dir, "events").select("user_id", "event_type", "ts", "event_id")
-    if ev.schema["ts"].dataType.typeName() == "timestamp_ntz":
-        ev = ev.withColumn("ts", ntz_as_utc_instant("ts"))
-    ev = ev.select(
+    ev = as_event_time(
+        t(spark, sf_dir, "events").select("user_id", "event_type", "ts", "event_id")
+    ).select(
         "user_id", "event_type", F.unix_micros("ts").alias("ts_us"), "event_id"
     )
     lo, hi = ev.agg(F.min("ts_us"), F.max("ts_us")).collect()[0]
@@ -1642,17 +1599,8 @@ def _q247(spark, sf_dir):
         )
     )
 
-    import shutil
-
     landing = scratch("q247_landing")
-    os.makedirs(landing, exist_ok=True)
-    stage = scratch("q247_stage")
-    ev.filter(F.col("ts_us") >= mid).coalesce(1).write.mode("overwrite").parquet(stage)
-    part = next(
-        p for p in os.listdir(stage)
-        if p.startswith("part-") and p.endswith(".parquet")
-    )
-    shutil.copyfile(os.path.join(stage, part), os.path.join(landing, "p1.parquet"))
+    land_file(ev.filter(F.col("ts_us") >= mid), landing, "p1.parquet")
 
     stream = spark.readStream.schema(
         "user_id long, event_type string, ts_us long, event_id long"
@@ -1815,32 +1763,20 @@ def q251(spark, sf_dir):
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
-    # Restored in the finally: this conf leaked at session scope and an
-    # r13 x1000 probe measured the blast radius — a q258 run AFTER q251
-    # in one session took 188 s vs 23 s solo (changelog mode defers
+    # Scoped, not set: this conf leaked at session scope and an r13
+    # x1000 probe measured the blast radius — a q258 run AFTER q251 in
+    # one session took 188 s vs 23 s solo (changelog mode defers
     # snapshot work to the shared background maintenance thread, and
     # q251's 1.5M-row complete-mode stores keep it busy long after this
     # entry returns). providerClass above is left set deliberately: it
     # matches get_spark()'s default and exists for vanilla sessions.
-    _CHANGELOG_CONF = (
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    )
-    saved = spark.conf.get(_CHANGELOG_CONF, None)
-    spark.conf.set(_CHANGELOG_CONF, "true")
-    try:
+    changelog = {
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true"
+    }
+    with scoped_conf(spark, changelog):
         ev = t(spark, sf_dir, "events").select("event_id", "user_id", "value")
         landing = scratch(f"q251_landing_{os.path.basename(sf_dir)}")
         ckpt = scratch(f"q251_ckpt_{os.path.basename(sf_dir)}")
-        os.makedirs(landing, exist_ok=True)
-
-        def drop_phase(pred, fname):
-            stage = scratch(f"q251_stage_{fname}")
-            ev.filter(pred).coalesce(1).write.mode("overwrite").parquet(stage)
-            part = next(
-                p for p in os.listdir(stage)
-                if p.startswith("part-") and p.endswith(".parquet")
-            )
-            os.replace(os.path.join(stage, part), os.path.join(landing, fname))
 
         def run(name):
             agg = (
@@ -1862,17 +1798,12 @@ def q251(spark, sf_dir):
             )
             q.awaitTermination()
 
-        drop_phase(F.col("event_id") % 2 == 0, "phase1.parquet")
+        land_file(ev.filter(F.col("event_id") % 2 == 0), landing, "phase1.parquet")
         run(f"s4_mem_q251a_{os.getpid()}")
-        drop_phase(F.col("event_id") % 2 != 0, "phase2.parquet")
+        land_file(ev.filter(F.col("event_id") % 2 != 0), landing, "phase2.parquet")
         final = f"s4_mem_q251b_{os.getpid()}"
         run(final)
         return spark.table(final).orderBy("user_id")
-    finally:
-        if saved is None:
-            spark.conf.unset(_CHANGELOG_CONF)
-        else:
-            spark.conf.set(_CHANGELOG_CONF, saved)
 
 
 def q251_checkpoint_dir(sf_dir: str) -> str:
@@ -1907,15 +1838,10 @@ def _q252(spark, sf_dir):
     proof (un-evicted state would carry phase-1 counts over)."""
     from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
     _ship_vendored_protobuf(spark)
     ev = t(spark, sf_dir, "events").select("event_id", "user_id")
     landing = scratch(f"q252_landing_{os.path.basename(sf_dir)}")
     ckpt = scratch(f"q252_ckpt_{os.path.basename(sf_dir)}")
-    os.makedirs(landing, exist_ok=True)
 
     class TtlCounter(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
@@ -1930,15 +1856,6 @@ def _q252(spark, sf_dir):
 
         def close(self) -> None:
             pass
-
-    def drop_phase(pred, fname):
-        stage = scratch(f"q252_stage_{fname}")
-        ev.filter(pred).coalesce(1).write.mode("overwrite").parquet(stage)
-        part = next(
-            p for p in os.listdir(stage)
-            if p.startswith("part-") and p.endswith(".parquet")
-        )
-        os.replace(os.path.join(stage, part), os.path.join(landing, fname))
 
     def run(name, outdir):
         out = (
@@ -2027,12 +1944,12 @@ def _q252(spark, sf_dir):
 
     out1 = scratch(f"q252_out1_{os.path.basename(sf_dir)}")
     out2 = scratch(f"q252_out2_{os.path.basename(sf_dir)}")
-    drop_phase(F.col("event_id") % 2 == 0, "phase1.parquet")
+    land_file(ev.filter(F.col("event_id") % 2 == 0), landing, "phase1.parquet")
     p1 = run(f"s4_q252a_{os.getpid()}", out1).select(
         F.lit(1).alias("phase"), "user_id", "n"
     )
     time.sleep(2.5)  # let the 1000 ms TTL lapse before phase 2 arrives
-    drop_phase(F.col("event_id") % 2 != 0, "phase2.parquet")
+    land_file(ev.filter(F.col("event_id") % 2 != 0), landing, "phase2.parquet")
     p2 = run(f"s4_q252b_{os.getpid()}", out2).select(
         F.lit(2).alias("phase"), "user_id", "n"
     )
@@ -2344,11 +2261,7 @@ def q273(spark, sf_dir):
     verbatim in the oracle's HAVING."""
     from pyspark.sql import Window as W
 
-    from s4_spark.streaming.rigs import two_stream_two_phase
-
-    ev = t(spark, sf_dir, "events").select("event_id", "ts", "event_type")
-    if ev.schema["ts"].dataType.typeName() == "timestamp_ntz":
-        ev = ev.withColumn("ts", ntz_as_utc_instant("ts"))
+    ev = as_event_time(t(spark, sf_dir, "events").select("event_id", "ts", "event_type"))
     lo = ev.agg(F.min("ts")).collect()[0][0]
     base = F.lit(lo).cast("timestamp")
 
@@ -2378,8 +2291,11 @@ def q273(spark, sf_dir):
 
     # bounded result (calendar windows x event types)
     return ordered_small(
-        two_stream_two_phase(
-            spark, clicks, purch, clicks.limit(0), purch.limit(0), build, tag="q273"
+        replay(
+            spark,
+            [(clicks, purch), (clicks.limit(0), purch.limit(0))],
+            build,
+            tag="q273",
         ),
         "w_start",
         "etype",

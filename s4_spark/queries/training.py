@@ -24,6 +24,7 @@ from s4_spark.operators import similarity as S
 from s4_spark.queries.helpers import ordered_small, davg, sql_davg, t, ts
 from s4_spark.queries.registry import query
 from s4_spark.scratch import scratch_root
+from s4_spark.session import scoped_conf
 
 # DuckDB mirror of operators/corpus.hash_bucket (md5-prefix bucket).
 _DUCK_HB = "(('0x' || substr(md5(text), 1, 6))::BIGINT % 1000)"
@@ -1598,16 +1599,8 @@ def q181(spark, sf_dir):
             F.pmod("doc_id", F.lit(4)).alias("shard"),
         )
     )
-    conf = "spark.sql.sources.partitionOverwriteMode"
-    saved = spark.conf.get(conf, None)
-    try:
-        spark.conf.set(conf, "dynamic")
+    with scoped_conf(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         delta.write.partitionBy("lang", "shard").mode("overwrite").parquet(path)
-    finally:
-        if saved is None:
-            spark.conf.unset(conf)
-        else:
-            spark.conf.set(conf, saved)
     back = spark.read.parquet(path)
     return (
         back.groupBy("lang", "shard")

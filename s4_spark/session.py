@@ -19,10 +19,33 @@ chosen to also hold on a 1000-executor cluster reading 100 TB:
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]):
+    """Set runtime SQL confs for the duration of a block, then put each
+    key back exactly as it was — even when the block raises.
+
+    A key that was unset before is UNSET on exit, not re-set: saving with
+    ``get(k)`` (no default) fetches the registered default and would pin
+    it as an explicit conf on restore, a leak into every later query on
+    a shared session. Hence ``get(k, None)``."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def get_spark(

@@ -1,7 +1,13 @@
 """Streaming test rigs: batch-equivalence runners (SURVEY.md §2-B
 methodology — run the streaming query with availableNow over static data,
-compare with batch SQL) and the deterministic two-phase replay rig for
-watermark semantics (the one category no batch oracle can express).
+compare with batch SQL) and the deterministic replay rig for watermark
+semantics (the one category no batch oracle can express).
+
+:func:`replay` is the replayable-source / forced-batch-boundary model:
+each phase lands as exactly one parquet file per stream
+(:func:`land_file`) and ``processAllAvailable()`` between phases pins
+every micro-batch boundary, so watermark progression — on one stream or
+on the min of several — is reproducible row for row.
 """
 
 from __future__ import annotations
@@ -15,48 +21,21 @@ from pyspark.sql import functions as F
 
 from s4_spark.catalog import normalize_events
 from s4_spark.scratch import scratch_root
+from s4_spark.session import scoped_conf
 
 _counter = itertools.count()
 
-#: Shuffle/state partition count for the deterministic REPLAY rigs
-#: (two_phase_replay / two_stream_two_phase) only. Replay fixtures are
-#: bounded by construction (each phase is one staged file of ~dozens of
-#: rows), while every state partition costs a RocksDB instance
-#: open/commit PER STORE PER MICRO-BATCH — a stream-stream join keeps 4
-#: stores per partition, so the session default (8) paid
-#: 8 x 4 x batches RocksDB cycles to join ~30 rows. Measured r14
-#: (sf0.01, min-of-2): q165 10.2 s -> 7.8 s at 4 (6.1 s at 2, but 2 was
-#: noisy/worse on q106), q106 3.2 -> 3.0. This is NOT a local[32] tune:
-#: the rig's input is rig-sized at ANY corpus scale, so its state
-#: partition count is a property of the rig, not the box; production
-#: streams (run_to_memory/run_to_parquet consumers) keep session
-#: defaults. Env-overridable for experiments.
-REPLAY_SHUFFLE_PARTITIONS = int(os.environ.get("S4_REPLAY_SHUFFLE_PARTITIONS", "4"))
-
-
-class _replay_partitions:
-    """Scope spark.sql.shuffle.partitions to a replay rig run, restoring
-    the previous value (or unsetting — the session-leak contract: a conf
-    that was unset must not come back pinned) on exit."""
-
-    _KEY = "spark.sql.shuffle.partitions"
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-
-    def __enter__(self):
-        # get with explicit None default: get(k) without a default would
-        # fetch the REGISTERED default and pin it on restore
-        self.saved = self.spark.conf.get(self._KEY, None)
-        self.spark.conf.set(self._KEY, str(REPLAY_SHUFFLE_PARTITIONS))
-        return self
-
-    def __exit__(self, *exc):
-        if self.saved is None:
-            self.spark.conf.unset(self._KEY)
-        else:
-            self.spark.conf.set(self._KEY, self.saved)
-        return False
+#: Shuffle/state partition count inside :func:`replay` only. Replay
+#: fixtures are bounded by construction (each phase is one landed file
+#: of ~dozens of rows), while every state partition costs a RocksDB
+#: instance open/commit PER STORE PER MICRO-BATCH — a stream-stream join
+#: keeps 4 stores per partition, so the session default (8) paid
+#: 8 x 4 x batches RocksDB cycles to join ~30 rows (sf0.01, min-of-2:
+#: q165 10.2 s -> 7.8 s at 4). The rig's input is rig-sized at ANY
+#: corpus scale, so this is a property of the rig, not the box;
+#: production streams (run_to_memory/run_to_parquet consumers) keep
+#: session defaults.
+REPLAY_SHUFFLE_PARTITIONS = 4
 
 
 def scratch(tag: str) -> str:
@@ -92,6 +71,37 @@ def instant_as_utc_ntz(col: str):
     return F.expr(f"timestampadd(MICROSECOND, unix_micros({col}), {_EPOCH_NTZ})")
 
 
+def as_event_time(df: DataFrame, col: str = "ts") -> DataFrame:
+    """``df`` with ``col`` usable as streaming event time: a
+    TIMESTAMP_NTZ wall clock is pinned to its UTC instant
+    (:func:`ntz_as_utc_instant`); a TIMESTAMP column passes through."""
+    if df.schema[col].dataType.typeName() == "timestamp_ntz":
+        return df.withColumn(col, ntz_as_utc_instant(col))
+    return df
+
+
+def land_file(df: DataFrame, landing: str, fname: str, mtime: int | None = None) -> None:
+    """Land ``df`` as exactly one parquet file ``landing/fname`` (one
+    file = one micro-batch under ``maxFilesPerTrigger=1``).
+
+    The frame is written coalesced to a sibling stage dir and its single
+    part file is renamed into place, so a file source listing
+    ``landing`` never sees a partial file. ``mtime`` pins the file's
+    modification time — FileStreamSource orders files by it, and
+    back-to-back writes can tie on coarse-mtime filesystems."""
+    os.makedirs(landing, exist_ok=True)
+    stage = f"{landing.rstrip('/')}.stage"
+    df.coalesce(1).write.mode("overwrite").parquet(stage)
+    part = next(
+        p for p in os.listdir(stage) if p.startswith("part-") and p.endswith(".parquet")
+    )
+    dest = os.path.join(landing, fname)
+    os.replace(os.path.join(stage, part), dest)
+    shutil.rmtree(stage, ignore_errors=True)
+    if mtime is not None:
+        os.utime(dest, (mtime, mtime))
+
+
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events as a streaming DataFrame (file source over a landing dir).
 
@@ -115,10 +125,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .format("parquet")
         .load(landing)
     )
-    ev = normalize_events(raw)
-    if ev.schema["ts"].dataType.typeName() == "timestamp_ntz":
-        ev = ev.withColumn("ts", ntz_as_utc_instant("ts"))
-    return ev
+    return as_event_time(normalize_events(raw))
 
 
 def run_to_memory(
@@ -264,115 +271,57 @@ def run_to_parquet(
     return read_batched_parquet(df.sparkSession, out, schema)
 
 
-def two_phase_replay(
+def replay(
     spark: SparkSession,
-    phase1: DataFrame,
-    phase2: DataFrame,
+    phases: list[tuple[DataFrame, ...]],
     build_query,
     tag: str = "replay",
 ) -> DataFrame:
-    """Deterministic watermark replay: write phase-1 rows to a landing
-    dir, process to completion (watermark advances to max(ts) - delay at
-    the NEXT batch), then write phase-2 (containing late rows) and
-    process again. Append-mode results show exactly which windows closed
-    and which late rows were dropped. Fully deterministic because batch
-    boundaries are forced by processAllAvailable() between phases."""
-    landing = scratch(f"{tag}_landing")
-    os.makedirs(landing, exist_ok=True)
+    """Deterministic watermark replay over one or more file-source
+    streams. ``phases`` lists, per phase, one frame per stream;
+    ``build_query(*streams)`` builds the append-mode query over them.
+
+    Phase 1 lands and is processed to completion (the watermark
+    advances to max(ts) - delay at the NEXT batch); each later phase
+    (typically carrying late rows) lands and is processed the same way;
+    a final empty tick applies the watermark computed from the last
+    phase so its non-late windows close. Append output then shows
+    exactly which windows closed and which late rows were dropped —
+    deterministic because ``processAllAvailable()`` forces every batch
+    boundary, on every stream (outer-join null emission and union
+    windows depend on the MIN of the streams' watermarks). The query is
+    stopped on every exit path."""
+    landings = [scratch(f"{tag}_s{i}") for i in range(len(phases[0]))]
     name = f"s4_mem_{tag}_{next(_counter)}"
+    ticks = [*phases, tuple(df.limit(0) for df in phases[-1])]
 
-    def drop_file(df: DataFrame, fname: str) -> None:
-        # stage as one flat parquet file so each phase is exactly one
-        # source file (one micro-batch with maxFilesPerTrigger=1)
-        tmp = scratch(f"{tag}_stage")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p for p in os.listdir(tmp) if p.startswith("part-") and p.endswith(".parquet")
-        )
-        shutil.copyfile(os.path.join(tmp, part), os.path.join(landing, fname))
+    def land(i: int) -> None:
+        for landing, df in zip(landings, ticks[i]):
+            land_file(df, landing, f"p{i + 1}.parquet")
 
-    drop_file(phase1, "p1.parquet")
-    with _replay_partitions(spark):
-        stream = (
-            spark.readStream.schema(phase1.schema)
+    land(0)
+    with scoped_conf(
+        spark, {"spark.sql.shuffle.partitions": str(REPLAY_SHUFFLE_PARTITIONS)}
+    ):
+        streams = [
+            spark.readStream.schema(df.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(landing)
-        )
-        out = build_query(stream)
+            for df, landing in zip(ticks[0], landings)
+        ]
         q = (
-            out.writeStream.format("memory")
+            build_query(*streams)
+            .writeStream.format("memory")
             .queryName(name)
             .outputMode("append")
             .option("checkpointLocation", scratch(f"ckpt_{name}"))
             .start()
         )
-        q.processAllAvailable()
-        drop_file(phase2, "p2.parquet")
-        q.processAllAvailable()
-        # a final tick (empty file) applies the watermark computed from
-        # phase 2 so its non-late windows close deterministically
-        drop_file(phase2.limit(0), "p3.parquet")
-        q.processAllAvailable()
-        q.stop()
-    return spark.table(name)
-
-
-def two_stream_two_phase(
-    spark: SparkSession,
-    left1: DataFrame,
-    right1: DataFrame,
-    left2: DataFrame,
-    right2: DataFrame,
-    build_query,
-    tag: str = "replay2",
-) -> DataFrame:
-    """Two-stream variant of :func:`two_phase_replay` for stream-stream
-    join semantics: each stream gets its own landing dir; phases drop one
-    file per stream and run to completion, so watermark progression on
-    BOTH sides is deterministic (outer-join null emission depends on the
-    MIN of the two watermarks — only a forced batch boundary makes that
-    reproducible)."""
-    landings = [scratch(f"{tag}_l"), scratch(f"{tag}_r")]
-    for d in landings:
-        os.makedirs(d, exist_ok=True)
-    name = f"s4_mem_{tag}_{next(_counter)}"
-
-    def drop_file(df: DataFrame, landing: str, fname: str) -> None:
-        tmp = scratch(f"{tag}_stage")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p for p in os.listdir(tmp)
-            if p.startswith("part-") and p.endswith(".parquet")
-        )
-        shutil.copyfile(os.path.join(tmp, part), os.path.join(landing, fname))
-
-    drop_file(left1, landings[0], "p1.parquet")
-    drop_file(right1, landings[1], "p1.parquet")
-    with _replay_partitions(spark):
-        ls = (
-            spark.readStream.schema(left1.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landings[0])
-        )
-        rs = (
-            spark.readStream.schema(right1.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landings[1])
-        )
-        out = build_query(ls, rs)
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", scratch(f"ckpt_{name}"))
-            .start()
-        )
-        q.processAllAvailable()
-        drop_file(left2, landings[0], "p2.parquet")
-        drop_file(right2, landings[1], "p2.parquet")
-        q.processAllAvailable()
-        drop_file(left2.limit(0), landings[0], "p3.parquet")
-        drop_file(right2.limit(0), landings[1], "p3.parquet")
-        q.processAllAvailable()
-        q.stop()
+        try:
+            q.processAllAvailable()
+            for i in range(1, len(ticks)):
+                land(i)
+                q.processAllAvailable()
+        finally:
+            q.stop()
     return spark.table(name)

@@ -29,8 +29,12 @@ def serve_lines(sock_path: str, payload: bytes, accept_n: int = 1) -> threading.
     def run():
         for _ in range(accept_n):
             conn, _ = srv.accept()
-            conn.sendall(payload)
-            conn.close()
+            try:
+                conn.sendall(payload)
+            except OSError:
+                pass  # client hung up early (BrokenPipe/ConnectionReset)
+            finally:
+                conn.close()
         srv.close()
 
     th = threading.Thread(target=run, daemon=True)

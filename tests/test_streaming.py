@@ -353,13 +353,11 @@ def test_q234_funnel_state_survives_multi_batch(spark, tmp_path):
     emits one row per user per batch. Force 3 micro-batches
     (maxFilesPerTrigger=1 over 3 time-ordered files) and assert the
     aggregated funnel equals the single-batch result."""
-    import os
-
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from s4_spark.catalog import table
-    from s4_spark.streaming.rigs import ntz_as_utc_instant
+    from s4_spark.streaming.rigs import as_event_time, land_file
 
     # time-ordered thirds so cross-batch arrival respects event order
     ev = table(spark, SF_DIR, "events").select(
@@ -368,27 +366,17 @@ def test_q234_funnel_state_survives_multi_batch(spark, tmp_path):
     n = ev.count()
     ordered = ev.orderBy("ts", "event_id").collect()
     landing = str(tmp_path / "landing")
-    os.makedirs(landing)
     third = (n + 2) // 3
     for i in range(3):
         rows = ordered[i * third : (i + 1) * third]
-        spark.createDataFrame(rows, ev.schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"stage{i}"))
-        part = next(
-            p
-            for p in os.listdir(str(tmp_path / f"stage{i}"))
-            if p.startswith("part-") and p.endswith(".parquet")
+        # strictly increasing mtimes: FileStreamSource orders files by
+        # modification time, which can TIE on coarse-mtime filesystems
+        land_file(
+            spark.createDataFrame(rows, ev.schema),
+            landing,
+            f"{i:03d}.parquet",
+            1_000_000 + i,
         )
-        os.rename(
-            str(tmp_path / f"stage{i}" / part),
-            os.path.join(landing, f"{i:03d}.parquet"),
-        )
-        # FileStreamSource orders files by modification time; the rename
-        # preserves the stage files' mtimes, which can TIE on coarse-mtime
-        # filesystems and process out of order — pin strictly increasing
-        # mtimes explicitly (round-5 advice item)
-        os.utime(os.path.join(landing, f"{i:03d}.parquet"), (1_000_000 + i, 1_000_000 + i))
 
     DEADLINE_US = 48 * 3600 * 1_000_000
 
@@ -418,14 +406,12 @@ def test_q234_funnel_state_survives_multi_batch(spark, tmp_path):
         )
 
     schema = ev.schema
-    stream = (
+    stream = as_event_time(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .format("parquet")
         .load(landing)
     )
-    if stream.schema["ts"].dataType.typeName() == "timestamp_ntz":
-        stream = stream.withColumn("ts", ntz_as_utc_instant("ts"))
     out = stream.groupBy("user_id").applyInPandasWithState(
         funnel,
         outputStructType="user_id long, t1 long, t2 long, t3 long",
@@ -531,24 +517,6 @@ def test_q251_changelog_files_written_and_state_recovered(spark, duck):
     assert changelogs, "no .changelog files — changelog checkpointing not exercised"
 
 
-def test_q251_restores_changelog_conf(spark):
-    """r13 x1000 probe find: q251 left changelogCheckpointing enabled at
-    SESSION scope, and a q258 run later in the same session measured
-    188 s vs 23 s solo (every subsequent streaming query silently ran
-    in changelog mode). The entry must restore the conf on exit —
-    collect() the previous test's rig already ran; here just assert the
-    session is clean after a fresh invocation."""
-    from s4_spark.queries import REGISTRY
-    from tests.conftest import SMOKE_SF_DIR
-
-    conf = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    before = spark.conf.get(conf, None)
-    REGISTRY["q251_rocksdb_changelog_restart"].fn(spark, SMOKE_SF_DIR).collect()
-    assert spark.conf.get(conf, None) == before, (
-        "q251 leaked the changelog conf into the session"
-    )
-
-
 def test_q252_ttl_actually_evicts(spark):
     """The TTL proof, stated as an inequality: phase-2 counts must
     equal the phase-2-only aggregate — strictly LESS than the
@@ -597,9 +565,8 @@ def _q273_companion_run(spark, purchase_bound: str, tag: str):
     parameterized purchase bound; return (emitted window starts,
     final global watermark string from query progress)."""
     import datetime as dt
-    import shutil
 
-    from s4_spark.streaming.rigs import scratch
+    from s4_spark.streaming.rigs import land_file, scratch
 
     hours = [0, 1, 2, 3]
     mk = lambda h: dt.datetime(2024, 1, 1, h, 30)
@@ -610,20 +577,8 @@ def _q273_companion_run(spark, purchase_bound: str, tag: str):
         [("purchase", mk(h)) for h in hours], "etype string, ts timestamp"
     )
     landings = [scratch(f"{tag}_c"), scratch(f"{tag}_p")]
-    for d in landings:
-        os.makedirs(d, exist_ok=True)
-
-    def drop(df, landing, fname):
-        stage = scratch(f"{tag}_stage")
-        df.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = next(
-            p for p in os.listdir(stage)
-            if p.startswith("part-") and p.endswith(".parquet")
-        )
-        shutil.copyfile(os.path.join(stage, part), os.path.join(landing, fname))
-
-    drop(clicks, landings[0], "p1.parquet")
-    drop(purch, landings[1], "p1.parquet")
+    land_file(clicks, landings[0], "p1.parquet")
+    land_file(purch, landings[1], "p1.parquet")
     cs = spark.readStream.schema(clicks.schema).parquet(landings[0])
     ps = spark.readStream.schema(purch.schema).parquet(landings[1])
     u = cs.withWatermark("ts", "1 minute").unionByName(
@@ -644,13 +599,31 @@ def _q273_companion_run(spark, purchase_bound: str, tag: str):
     )
     q.processAllAvailable()
     # empty second files advance both source watermarks past phase-1 maxes
-    drop(clicks.limit(0), landings[0], "p2.parquet")
-    drop(purch.limit(0), landings[1], "p2.parquet")
+    land_file(clicks.limit(0), landings[0], "p2.parquet")
+    land_file(purch.limit(0), landings[1], "p2.parquet")
     q.processAllAvailable()
     wm = q.lastProgress["eventTime"]["watermark"]
     q.stop()
     starts = sorted(r.w_start for r in spark.table(name).collect())
     return starts, wm
+
+
+def test_replay_stops_query_when_a_phase_fails(spark):
+    """A phase whose landing write raises must surface the error AND
+    leave no rig query running — a leaked active query keeps polling its
+    landing dir and holds state stores for the rest of the session."""
+    from s4_spark.streaming.rigs import replay
+
+    p1 = spark.range(3).select(F.col("id"))
+    p2 = spark.range(3).select(
+        F.raise_error(F.lit("phase 2 fails")).cast("long").alias("id")
+    )
+    with pytest.raises(Exception, match="phase 2 fails"):
+        replay(spark, [(p1,), (p2,)], lambda s: s, tag="replayfail")
+    leaked = [
+        q.name for q in spark.streams.active if q.name.startswith("s4_mem_replayfail_")
+    ]
+    assert not leaked, leaked
 
 
 def test_q273_min_policy_slow_source_withholds_window(spark):
